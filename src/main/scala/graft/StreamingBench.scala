@@ -507,7 +507,7 @@ object StreamingBench {
   /** HOT-KEY PROBE for the event-time TTL kernel's one documented
     * memory bound: the kernel buffers ONE KEY'S slice of ONE
     * micro-batch for its in-kernel event-time sort
-    * (MapWithStateTTL.scala:137-143), so the envelope under a
+    * ([[graft.streaming.TtlFold]]), so the envelope under a
     * pathological key is set by ADMISSION, not by the key's history.
     * This line drives the ENTIRE corpus through a single key in
     * [[HotKeySlices]] bounded micro-batches — each `addData` chunk is

@@ -4,6 +4,7 @@ import java.nio.ByteBuffer
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -44,6 +45,15 @@ case class VecSumAgg(
   require(dim > 0, s"dim must be positive, got $dim")
 
   override def children: Seq[Expression] = Seq(e, w)
+
+  // update() reads getLong from both inputs: any other type would fail
+  // in an executor, so it is rejected while the plan is analyzed
+  override def checkInputDataTypes(): TypeCheckResult = (e.dataType, w.dataType) match {
+    case (ArrayType(LongType, _), LongType) => TypeCheckResult.TypeCheckSuccess
+    case (et, wt) => TypeCheckResult.TypeCheckFailure(
+      s"vec_sum_agg requires (array<bigint>, bigint), got (${et.simpleString}, ${wt.simpleString})")
+  }
+
   override def nullable: Boolean = false
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 

@@ -91,8 +91,10 @@ object CountWindows {
 
     override def handleInputRows(
         key: K, rows: Iterator[In], tv: TimerValues): Iterator[Out] = {
-      val prior =
-        if (state.exists()) state.get().items.toVector else Vector.empty[In]
+      // one store read: get() is null for an absent key (exists() would
+      // be a second get())
+      val t = state.get()
+      val prior = if (t == null) Vector.empty[In] else t.items.toVector
       val (out, buf) = drain(key, prior, rows, size, orderOf, tiebreak, agg)
       // empty buffer ⇒ no state at all, same as the GroupState form: a
       // retained empty Buffered would pin every completed-window key in

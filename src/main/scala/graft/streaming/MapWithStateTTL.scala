@@ -14,30 +14,20 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * wrapper, a timer thread, checkpointed pending tombstones). Structured
   * Streaming provides the same semantics natively through
   * `flatMapGroupsWithState` + `GroupStateTimeout`, so this operator is a
-  * declarative ~60-line library function with none of that machinery:
+  * thin adapter over the TTL contract in [[TtlFold]]:
   *
-  *  - state refresh on access = `setTimeoutDuration(ttl)` per event
+  *  - state refresh on access = a timeout re-armed per batch, by duration
+  *    (processing time) or by [[TtlFold.deadlineMs]] (event time)
   *    (reference: read refreshes `lastAccessTimestamp`, MapWithState.java:248-252);
   *  - eviction = `state.remove()` on `hasTimedOut`
   *    (reference: tombstone-triggered `valueState.clear()`, MapWithState.java:360-367);
   *  - the reference's `ttlRefreshInterval` tombstone re-arm has no
   *    counterpart — timeout firing granularity is the micro-batch trigger.
   *
-  * Faithfulness detail: Spark fires a key's timeout only when a batch runs
-  * and only if that key received no data in it. If a key sits idle past the
-  * TTL and then receives data in the very next batch, the timeout callback
-  * never fires for it — so, like the reference (which checks elapsed time
-  * on every tombstone, MapWithState.java:361), we also check elapsed time
-  * on the data path and reset to `defaultState` when the key had expired.
-  * Boundary convention: this library resets on gap STRICTLY GREATER than
-  * ttl (keep at ==), matching the batch oracle (q14's `gap > ttl` new-
-  * session rule) — the binding contract here; the reference's tombstone
-  * check evicted at `≥ ttl` (one-boundary divergence, intentional and
-  * documented rather than silently inconsistent with the oracle).
-  * The [[TimeStamped]] envelope mirrors the
-  * reference's `TimeStampedValue` (MapWithState.java:232-263); here the
-  * timestamp comes from the batch clock, not a wall-clock read per record,
-  * so results are deterministic within a batch.
+  * The [[TimeStamped]] envelope mirrors the reference's `TimeStampedValue`
+  * (MapWithState.java:232-263); here the timestamp comes from the batch
+  * clock, not a wall-clock read per record, so results are deterministic
+  * within a batch.
   *
   * Scale posture (100 TB): state is per-key-bounded (a single `S` + one
   * long), lives in the executor-local StateStore (RocksDB provider for
@@ -51,7 +41,8 @@ object MapWithStateTTL {
   case class TimeStamped[S](value: S, lastAccessMs: Long)
 
   /** Processing-time TTL (reference default: TTL measured from last access
-    * in wall-clock time, MapWithState.java:250,360).
+    * in wall-clock time, MapWithState.java:250,360). Rows of one key fold
+    * in arrival order.
     *
     * Caveat observed at the surface: elapsed time is measured between batch
     * *trigger* times, and a cold first micro-batch can take seconds in
@@ -70,32 +61,9 @@ object MapWithStateTTL {
       f: (K, In, S) => (Out, S))(
       implicit kEnc: Encoder[K],
       sEnc: Encoder[TimeStamped[S]],
-      outEnc: Encoder[Out]): Dataset[Out] = {
-    val ttlMs = ttl.toMillis
-    ds.groupByKey(keyOf)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.ProcessingTimeTimeout) {
-        (key: K, it: Iterator[In], state: GroupState[TimeStamped[S]]) =>
-          if (state.hasTimedOut) {
-            state.remove() // eviction (reference: valueState.clear())
-            Iterator.empty
-          } else {
-            val nowMs = state.getCurrentProcessingTimeMs()
-            // data-path expiry check: key idle past TTL restarts from default
-            var s = state.getOption match {
-              case Some(ts) if nowMs - ts.lastAccessMs <= ttlMs => ts.value
-              case _ => defaultState
-            }
-            val out = it.map { in =>
-              val (o, s2) = f(key, in, s)
-              s = s2
-              o
-            }.toVector
-            state.update(TimeStamped(s, nowMs))
-            state.setTimeoutDuration(ttlMs) // refresh-on-access
-            out.iterator
-          }
-      }
-  }
+      outEnc: Encoder[Out]): Dataset[Out] =
+    withGroupState(ds, ttl, defaultState, eventTimeMicros = None)(
+      keyOf, _ => 0L, _ => 0L)(f)
 
   /** Event-time TTL — the variant the reference author wanted but Flink
     * 1.1.3 couldn't express (SURVEY §7.2 step 6). A key whose event-time
@@ -103,9 +71,9 @@ object MapWithStateTTL {
     * the watermark (`EventTimeTimeout`), so the caller must put
     * `.withWatermark` on the source for expired state to be dropped.
     *
-    * Elements are processed in event-time order within each batch
-    * (`eventTimeMicros` sort); cross-batch disorder beyond the watermark is
-    * the caller's contract, as everywhere in Structured Streaming.
+    * Elements are processed in `(eventTimeMicros, tiebreak)` order within
+    * each batch; cross-batch disorder beyond the watermark is the
+    * caller's contract, as everywhere in Structured Streaming.
     *
     * Determinism makes this the oracle-checkable twin of the batch
     * gap-sessionization query (Relational.q14MapWithStateTtl); the
@@ -121,47 +89,50 @@ object MapWithStateTTL {
       f: (K, In, S) => (Out, S))(
       implicit kEnc: Encoder[K],
       sEnc: Encoder[TimeStamped[S]],
+      outEnc: Encoder[Out]): Dataset[Out] =
+    withGroupState(ds, ttl, defaultState, Some(eventTimeMicros))(
+      keyOf, eventTimeMicros, tiebreak)(f)
+
+  /** The one `flatMapGroupsWithState` adapter over [[TtlFold]]: a timed-out
+    * key is removed; otherwise the slice folds and the timeout is re-armed,
+    * by duration when `eventTimeMicros` is None (processing time), else by
+    * the event-time deadline. */
+  private[streaming] def withGroupState[In, K, S, Out](
+      ds: Dataset[In],
+      ttl: FiniteDuration,
+      defaultState: S,
+      eventTimeMicros: Option[In => Long])(
+      keyOf: In => K,
+      orderOf: In => Long,
+      tiebreak: In => Long)(
+      f: (K, In, S) => (Out, S))(
+      implicit kEnc: Encoder[K],
+      sEnc: Encoder[TimeStamped[S]],
       outEnc: Encoder[Out]): Dataset[Out] = {
+    val ttlMs = ttl.toMillis
     val ttlUs = ttl.toMicros
+    // the fold compares clocks in the clock's own unit
+    val (timeout, clockTtl) =
+      if (eventTimeMicros.isDefined) (GroupStateTimeout.EventTimeTimeout, ttlUs)
+      else (GroupStateTimeout.ProcessingTimeTimeout, ttlMs)
     ds.groupByKey(keyOf)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.EventTimeTimeout) {
+      .flatMapGroupsWithState(OutputMode.Append(), timeout) {
         (key: K, it: Iterator[In], state: GroupState[TimeStamped[S]]) =>
           if (state.hasTimedOut) {
-            state.remove()
+            state.remove() // eviction (reference: valueState.clear())
             Iterator.empty
           } else {
-            // total order within the batch: event time, then the caller's
-            // tiebreak — without it, equal-timestamp events fold in
-            // arbitrary post-shuffle order and the streaming/batch
-            // equivalence (whose oracle orders by (ts, event_id)) breaks.
-            // MEMORY BOUND: this buffers ONE KEY'S slice of ONE
-            // micro-batch on the heap (hot-key spec: 100k-event key at
-            // default heap in RunningReduceSpec). flatMapGroupsWithState
-            // exposes no secondary-sort contract, so a spill-free fold
-            // needs this sort; a hotter key needs the batch bounded
-            // upstream (maxOffsetsPerTrigger / source rate limits).
-            val events = it.toVector.sortBy(in => (eventTimeMicros(in), tiebreak(in)))
-            var (s, lastUs) = state.getOption
-              .map(t => (t.value, t.lastAccessMs))
-              .getOrElse((defaultState, Long.MinValue))
-            val out = events.map { in =>
-              val us = eventTimeMicros(in)
-              if (lastUs != Long.MinValue && us - lastUs > ttlUs) s = defaultState
-              val (o, s2) = f(key, in, s)
-              s = s2
-              lastUs = us
-              o
+            val clockOf = eventTimeMicros.getOrElse {
+              val nowMs = state.getCurrentProcessingTimeMs()
+              (_: In) => nowMs
             }
-            state.update(TimeStamped(s, lastUs))
-            // cleanup once the watermark passes last event + ttl; round UP
-            // to the next ms (the truncated lastUs/1000 + ttlMs could fire
-            // up to ~1 ms before the true lastUs + ttl boundary and evict a
-            // session the data-path rule would have continued); must also
-            // stay ahead of the current watermark or Spark rejects it
-            val timeoutMs = math.max(
-              (lastUs + ttlUs) / 1000 + 1,
-              state.getCurrentWatermarkMs() + 1)
-            state.setTimeoutTimestamp(timeoutMs)
+            val (out, s, last) = TtlFold.fold(
+              key, it, state.getOption.map(t => (t.value, t.lastAccessMs)), defaultState,
+              clockTtl, clockOf, orderOf, tiebreak, f)
+            state.update(TimeStamped(s, last))
+            if (eventTimeMicros.isEmpty) state.setTimeoutDuration(ttlMs)
+            else state.setTimeoutTimestamp(
+              TtlFold.deadlineMs(last, ttlUs, state.getCurrentWatermarkMs()))
             out.iterator
           }
       }

@@ -1,11 +1,9 @@
 package graft.streaming
 
-import java.time.Duration
-
 import scala.concurrent.duration.FiniteDuration
 
 import org.apache.spark.sql.{Dataset, Encoder}
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulProcessor, StatefulProcessorWithInitialState, TTLConfig, TimeMode, TimerValues, ValueState}
 
 /** The Spark-4 `transformWithState` twin of the flagship
   * [[MapWithStateTTL]] — the reference's headline capability
@@ -13,18 +11,11 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulPro
   * expressed through the API Spark built for exactly this job: a
   * `StatefulProcessor` with NATIVE per-state-variable TTL
   * (`TTLConfig`) for processing time, and explicit per-key timers for
-  * event time.
+  * event time. Both processors are adapters over [[TtlFold]], so the
+  * observable contract is the flagship's, differentially spec-pinned
+  * (MapWithStateTWSSpec: identical outputs on identical feeds).
   *
-  * Same observable contract as the flagship, differentially
-  * spec-pinned (MapWithStateTWSSpec: identical outputs on identical
-  * feeds):
-  *  - a key idle past `ttl` restarts from `defaultState` (data-path
-  *    check, gap STRICTLY GREATER than ttl — the q14 oracle boundary);
-  *  - expired state is physically evicted (processing time: the
-  *    runtime's TTL sweep; event time: our watermark timer).
-  *
-  * API-level differences found while porting (the round-13 evaluation
-  * the judge asked for; details in SCALE.md):
+  * API-level differences found while porting (details in SCALE.md):
   *  - `transformWithState` REQUIRES the RocksDB state store provider —
   *    the right default at the 100-TB posture anyway, but specs/bench
   *    must pin `spark.sql.streaming.stateStore.providerClass`;
@@ -32,14 +23,11 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulPro
   *    cannot use it — eviction is hand-rolled with `registerTimer`,
   *    and timers are a SET per key (unlike `GroupState`'s single
   *    timeout slot), so re-arming must `deleteTimer` the stale one;
-  *  - TTL expiry semantics are value-granular and evict AT the
-  *    boundary; the flagship keeps state at gap == ttl, so the
-  *    native TTL is set to `ttl + 1 ms` and the `gap > ttl` reset
-  *    stays on the data path — state the runtime already dropped and
-  *    state the contract treats as expired then agree;
-  *  - input rows arrive UNSORTED within a batch, same as
-  *    `flatMapGroupsWithState` — the event-time variant keeps the
-  *    flagship's (eventTime, tiebreak) in-batch sort contract.
+  *  - TTL expiry is value-granular and evicts AT the boundary, hence
+  *    [[TtlFold.nativeTtl]];
+  *  - `ValueState.exists()` is `get() != null` (also under TTL, where an
+  *    expired value reads as null), so each handler reads a key's state
+  *    once with `get()` rather than paying two store reads.
   */
 object MapWithStateTWS {
 
@@ -50,6 +38,7 @@ object MapWithStateTWS {
 
   private class ProcTimeProcessor[K, In, S, Out](
       ttlMs: Long, defaultState: S,
+      orderOf: In => Long, tiebreak: In => Long,
       f: (K, In, S) => (Out, S),
       sEnc: Encoder[MapWithStateTTL.TimeStamped[S]])
     extends StatefulProcessor[K, In, Out] {
@@ -57,24 +46,14 @@ object MapWithStateTWS {
     @transient private var state: ValueState[MapWithStateTTL.TimeStamped[S]] = _
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      // native TTL at ttl+1 ms: the runtime evicts AT its boundary,
-      // the contract evicts strictly AFTER ttl — +1 aligns them
-      state = getHandle.getValueState("s", sEnc,
-        TTLConfig(Duration.ofMillis(ttlMs + 1)))
+      state = getHandle.getValueState("s", sEnc, TtlFold.nativeTtl(ttlMs))
 
     override def handleInputRows(
         key: K, rows: Iterator[In], tv: TimerValues): Iterator[Out] = {
       val nowMs = tv.getCurrentProcessingTimeInMs()
-      var s =
-        if (state.exists()) {
-          val t = state.get()
-          if (nowMs - t.lastAccessMs <= ttlMs) t.value else defaultState
-        } else defaultState
-      val out = rows.map { in =>
-        val (o, s2) = f(key, in, s)
-        s = s2
-        o
-      }.toVector
+      val prior = Option(state.get()).map(t => (t.value, t.lastAccessMs))
+      val (out, s, _) = TtlFold.fold(
+        key, rows, prior, defaultState, ttlMs, (_: In) => nowMs, orderOf, tiebreak, f)
       // update refreshes the native TTL clock — refresh-on-access, like
       // the flagship's setTimeoutDuration per batch
       state.update(MapWithStateTTL.TimeStamped(s, nowMs))
@@ -87,7 +66,7 @@ object MapWithStateTWS {
       eventTimeMicros: In => Long, tiebreak: In => Long,
       f: (K, In, S) => (Out, S),
       sEnc: Encoder[TwsState[S]])
-    extends org.apache.spark.sql.streaming.StatefulProcessorWithInitialState[K, In, Out, (K, S, Long)] {
+    extends StatefulProcessorWithInitialState[K, In, Out, (K, S, Long)] {
 
     @transient private var state: ValueState[TwsState[S]] = _
 
@@ -106,49 +85,32 @@ object MapWithStateTWS {
       // and the loser's armed timer is deleted (a leftover timer would
       // be harmless thanks to the timerMs guard in handleExpiredTimer,
       // but folding keeps the surviving state deterministic)
-      if (state.exists()) {
-        val t = state.get()
+      val t = state.get()
+      if (t != null) {
         if (init._3 <= t.lastUs) return
         getHandle.deleteTimer(t.timerMs)
       }
-      val timerMs = math.max(
-        (init._3 + ttlUs) / 1000 + 1,
-        tv.getCurrentWatermarkInMs() + 1)
+      val timerMs = TtlFold.deadlineMs(init._3, ttlUs, tv.getCurrentWatermarkInMs())
       getHandle.registerTimer(timerMs)
       state.update(TwsState(init._2, init._3, timerMs))
     }
 
     override def handleInputRows(
         key: K, rows: Iterator[In], tv: TimerValues): Iterator[Out] = {
-      // same in-batch total order (and the same one-key-one-batch heap
-      // bound) as the flagship — see MapWithStateTTL.eventTime
-      val events = rows.toVector.sortBy(in => (eventTimeMicros(in), tiebreak(in)))
       // empty-batch guard (the ProfileKernel discipline): never persist
       // defaultState or arm a timer for a key that brought no events
-      if (events.isEmpty) return Iterator.empty
-      var (s, lastUs, oldTimer) =
-        if (state.exists()) {
-          val t = state.get()
-          (t.value, t.lastUs, t.timerMs)
-        } else (defaultState, Long.MinValue, -1L)
-      val out = events.map { in =>
-        val us = eventTimeMicros(in)
-        if (lastUs != Long.MinValue && us - lastUs > ttlUs) s = defaultState
-        val (o, s2) = f(key, in, s)
-        s = s2
-        lastUs = us
-        o
+      if (!rows.hasNext) return Iterator.empty
+      val t = state.get()
+      val (out, s, lastUs) = TtlFold.fold(
+        key, rows, Option(t).map(t => (t.value, t.lastUs)), defaultState, ttlUs,
+        eventTimeMicros, eventTimeMicros, tiebreak, f)
+      // eager re-arm: the armed timer moves with every refresh, so it
+      // always sits at the current deadline
+      val timerMs = TtlFold.deadlineMs(lastUs, ttlUs, tv.getCurrentWatermarkInMs())
+      if (t == null || t.timerMs != timerMs) {
+        if (t != null) getHandle.deleteTimer(t.timerMs)
+        getHandle.registerTimer(timerMs)
       }
-      // eviction timer: fires once the watermark passes last + ttl
-      // (round UP to the next ms — the flagship's boundary note); must
-      // stay ahead of the current watermark or registration throws
-      val timerMs = math.max(
-        (lastUs + ttlUs) / 1000 + 1,
-        tv.getCurrentWatermarkInMs() + 1)
-      if (oldTimer >= 0 && oldTimer != timerMs) {
-        getHandle.deleteTimer(oldTimer)
-      }
-      if (oldTimer != timerMs) getHandle.registerTimer(timerMs)
       state.update(TwsState(s, lastUs, timerMs))
       out.iterator
     }
@@ -157,15 +119,16 @@ object MapWithStateTWS {
         key: K, tv: TimerValues, info: ExpiredTimerInfo): Iterator[Out] = {
       // only the CURRENTLY armed timer evicts — a stale one that raced
       // deletion must not drop refreshed state
-      if (state.exists() && state.get().timerMs == info.getExpiryTimeInMs())
-        state.clear()
+      val t = state.get()
+      if (t != null && t.timerMs == info.getExpiryTimeInMs()) state.clear()
       Iterator.empty
     }
   }
 
   /** Processing-time TTL via native `TTLConfig` — the
-    * `transformWithState` form of [[MapWithStateTTL.processingTime]].
-    * Requires the RocksDB state store provider. */
+    * `transformWithState` form of [[MapWithStateTTL.processingTime]];
+    * rows of one key fold in arrival order. Requires the RocksDB state
+    * store provider. */
   def processingTime[In, K, S, Out](
       ds: Dataset[In],
       ttl: FiniteDuration,
@@ -175,9 +138,25 @@ object MapWithStateTWS {
       implicit kEnc: Encoder[K],
       sEnc: Encoder[MapWithStateTTL.TimeStamped[S]],
       outEnc: Encoder[Out]): Dataset[Out] =
+    withNativeTtl(ds, ttl, defaultState)(keyOf, _ => 0L, _ => 0L)(f)
+
+  /** The `transformWithState` processing-time adapter over [[TtlFold]]:
+    * rows fold in `(orderOf, tiebreak)` order. */
+  private[streaming] def withNativeTtl[In, K, S, Out](
+      ds: Dataset[In],
+      ttl: FiniteDuration,
+      defaultState: S)(
+      keyOf: In => K,
+      orderOf: In => Long,
+      tiebreak: In => Long)(
+      f: (K, In, S) => (Out, S))(
+      implicit kEnc: Encoder[K],
+      sEnc: Encoder[MapWithStateTTL.TimeStamped[S]],
+      outEnc: Encoder[Out]): Dataset[Out] =
     ds.groupByKey(keyOf)
       .transformWithState(
-        new ProcTimeProcessor[K, In, S, Out](ttl.toMillis, defaultState, f, sEnc),
+        new ProcTimeProcessor[K, In, S, Out](
+          ttl.toMillis, defaultState, orderOf, tiebreak, f, sEnc),
         TimeMode.ProcessingTime(),
         OutputMode.Append())
 

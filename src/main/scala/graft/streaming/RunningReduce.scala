@@ -1,11 +1,9 @@
 package graft.streaming
 
-import java.time.Duration
-
 import scala.concurrent.duration.FiniteDuration
 
 import org.apache.spark.sql.{Dataset, Encoder}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Keyed running reduce emitting the cumulative value per event —
   * the reference's `keyBy(0).reduce(sum)` whose observed output is the
@@ -20,21 +18,6 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 object RunningReduce {
 
   case class Acc[S](value: S)
-
-  /** Shared deterministic batch fold: one key's micro-batch slice,
-    * sorted by (orderOf, tiebreak), folded from `start`, emitting the
-    * running value per event. Returns (emissions, final accumulator). */
-  private def foldSorted[In, K, S](
-      key: K, it: Iterator[In], start: S,
-      orderOf: In => Long, tiebreak: In => Long,
-      reduce: (S, In) => S): (Vector[(K, S)], S) = {
-    var acc = start
-    val out = it.toVector.sortBy(in => (orderOf(in), tiebreak(in))).map { in =>
-      acc = reduce(acc, in)
-      (key, acc)
-    }
-    (out, acc)
-  }
 
   /** @param tiebreak total-order tiebreak for equal `orderOf` values —
     *                  without it, tied events fold in arbitrary
@@ -59,21 +42,22 @@ object RunningReduce {
     ds.groupByKey(keyOf)
       .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout) {
         (key: K, it: Iterator[In], state: GroupState[Acc[S]]) =>
-          val (out, acc) = foldSorted(
-            key, it, state.getOption.map(_.value).getOrElse(zero),
-            orderOf, tiebreak, reduce)
+          var acc = state.getOption.map(_.value).getOrElse(zero)
+          val out = it.toVector.sortBy(in => (orderOf(in), tiebreak(in))).map { in =>
+            acc = reduce(acc, in)
+            (key, acc)
+          }
           state.update(Acc(acc))
           out.iterator
       }
 
   /** [[keyed]] with BOUNDED state: keys idle past `ttl` are physically
-    * evicted (ProcessingTimeTimeout + `state.remove()`) and restart from
-    * `zero` on their next event — the same refresh-on-access /
-    * data-path-expiry composition as MapWithStateTTL.processingTime.
-    * The un-TTL'd [[keyed]] is semantically faithful to the reference's
-    * `keyBy(0).reduce` (state per key, forever); this is the form a
-    * library whose headline theme is bounded state should hand to a
-    * churning 100 TB keyspace. */
+    * evicted and restart from `zero` on their next event — the
+    * [[MapWithStateTTL.processingTime]] adapter over [[TtlFold]], folding
+    * in `(orderOf, tiebreak)` order. The un-TTL'd [[keyed]] is
+    * semantically faithful to the reference's `keyBy(0).reduce` (state per
+    * key, forever); this is the form a library whose headline theme is
+    * bounded state should hand to a churning 100 TB keyspace. */
   def keyedWithTtl[In, K, S](
       ds: Dataset[In],
       zero: S,
@@ -84,72 +68,14 @@ object RunningReduce {
       reduce: (S, In) => S)(
       implicit kEnc: Encoder[K],
       tsEnc: Encoder[MapWithStateTTL.TimeStamped[S]],
-      outEnc: Encoder[(K, S)]): Dataset[(K, S)] = {
-    val ttlMs = ttl.toMillis
-    ds.groupByKey(keyOf)
-      .flatMapGroupsWithState(
-        OutputMode.Append(), GroupStateTimeout.ProcessingTimeTimeout) {
-        (key: K, it: Iterator[In], state: GroupState[MapWithStateTTL.TimeStamped[S]]) =>
-          if (state.hasTimedOut) {
-            state.remove() // eviction: idle key leaves the StateStore
-            Iterator.empty
-          } else {
-            val nowMs = state.getCurrentProcessingTimeMs()
-            // data-path expiry: a key that sat idle past ttl but got new
-            // data before its timeout fired restarts from zero
-            val start = state.getOption match {
-              case Some(ts) if nowMs - ts.lastAccessMs <= ttlMs => ts.value
-              case _ => zero
-            }
-            val (out, acc) = foldSorted(key, it, start, orderOf, tiebreak, reduce)
-            state.update(MapWithStateTTL.TimeStamped(acc, nowMs))
-            state.setTimeoutDuration(ttlMs) // refresh-on-access
-            out.iterator
-          }
-      }
-  }
+      outEnc: Encoder[(K, S)]): Dataset[(K, S)] =
+    MapWithStateTTL.withGroupState(ds, ttl, zero, eventTimeMicros = None)(
+      keyOf, orderOf, tiebreak)(emitRunning(reduce))
 
-  private class TtlTwsProcessor[K, In, S](
-      ttlMs: Long, zero: S,
-      orderOf: In => Long, tiebreak: In => Long,
-      reduce: (S, In) => S,
-      tsEnc: Encoder[MapWithStateTTL.TimeStamped[S]])
-    extends StatefulProcessor[K, In, (K, S)] {
-
-    @transient private var state: ValueState[MapWithStateTTL.TimeStamped[S]] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      // native TTL at ttl+1 ms (the MapWithStateTWS alignment): the
-      // runtime evicts AT its boundary, the contract keeps state at
-      // gap == ttl and restarts strictly AFTER — +1 makes state the
-      // runtime already swept and state the data path treats as expired
-      // agree
-      state = getHandle.getValueState("s", tsEnc,
-        TTLConfig(Duration.ofMillis(ttlMs + 1)))
-
-    override def handleInputRows(
-        key: K, rows: Iterator[In], tv: TimerValues): Iterator[(K, S)] = {
-      val nowMs = tv.getCurrentProcessingTimeInMs()
-      // data-path expiry, same as the GroupState form: survive a TTL
-      // sweep that hasn't run yet
-      val start =
-        if (state.exists()) {
-          val t = state.get()
-          if (nowMs - t.lastAccessMs <= ttlMs) t.value else zero
-        } else zero
-      val (out, acc) = foldSorted(key, rows, start, orderOf, tiebreak, reduce)
-      // update refreshes the native TTL clock — refresh-on-access, like
-      // the GroupState form's setTimeoutDuration per batch
-      state.update(MapWithStateTTL.TimeStamped(acc, nowMs))
-      out.iterator
-    }
-  }
-
-  /** The Spark-4 `transformWithState` twin of [[keyedWithTtl]] (VERDICT
-    * r18 item 6): bounded keyed running reduce with NATIVE per-state
-    * TTL (`TTLConfig`) instead of a GroupState timeout — the runtime
-    * owns the idle-key sweep, the data path keeps the gap>ttl restart.
-    * Identical observable contract, differentially spec-pinned in
+  /** The Spark-4 `transformWithState` twin of [[keyedWithTtl]]: the
+    * [[MapWithStateTWS.processingTime]] adapter, with NATIVE per-state
+    * TTL (`TTLConfig`) instead of a GroupState timeout. Identical
+    * observable contract, differentially spec-pinned in
     * RunningReduceSpec (identical eviction-script traces). Requires the
     * RocksDB state store provider (a `transformWithState` runtime
     * constraint). */
@@ -164,10 +90,13 @@ object RunningReduce {
       implicit kEnc: Encoder[K],
       tsEnc: Encoder[MapWithStateTTL.TimeStamped[S]],
       outEnc: Encoder[(K, S)]): Dataset[(K, S)] =
-    ds.groupByKey(keyOf)
-      .transformWithState(
-        new TtlTwsProcessor[K, In, S](
-          ttl.toMillis, zero, orderOf, tiebreak, reduce, tsEnc),
-        TimeMode.ProcessingTime(),
-        OutputMode.Append())
+    MapWithStateTWS.withNativeTtl(ds, ttl, zero)(
+      keyOf, orderOf, tiebreak)(emitRunning(reduce))
+
+  /** `reduce` as a TTL-fold step that emits the running value. */
+  private def emitRunning[K, In, S](reduce: (S, In) => S): (K, In, S) => ((K, S), S) =
+    (key, in, acc) => {
+      val next = reduce(acc, in)
+      ((key, next), next)
+    }
 }

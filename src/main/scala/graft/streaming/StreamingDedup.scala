@@ -73,10 +73,8 @@ object StreamingDedup {
               state.getOption.getOrElse(Long.MinValue),
               eventTimeMicros(events.last))
             state.update(lastUs)
-            val timeoutMs = math.max(
-              (lastUs + ttlUs) / 1000 + 1,
-              state.getCurrentWatermarkMs() + 1)
-            state.setTimeoutTimestamp(timeoutMs)
+            state.setTimeoutTimestamp(
+              TtlFold.deadlineMs(lastUs, ttlUs, state.getCurrentWatermarkMs()))
             out.iterator
           }
       }

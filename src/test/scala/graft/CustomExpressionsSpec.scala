@@ -394,4 +394,20 @@ class CustomExpressionsSpec extends SparkTestBase {
       .agg(VecSumAgg(col("e"), lit(1L), 2).as("y")).head().getSeq[Long](0)
     assert(unweighted == Seq(4L, 7L))
   }
+
+  test("VecSumAgg misuse fails at analysis time, not in an executor") {
+    import org.apache.spark.sql.AnalysisException
+    import graft.functions.expressions.VecSumAgg
+    val s = spark
+    import s.implicits._
+    val df = Seq((Seq(1, 2), Seq(1.0, 2.0), 3, 3L)).toDF("ints", "doubles", "wi", "wl")
+    Seq(
+      VecSumAgg(col("ints"), col("wl"), 2),
+      VecSumAgg(col("doubles"), col("wl"), 2),
+      VecSumAgg(array(lit(1L), lit(2L)), col("wi"), 2)).foreach { agg =>
+      // no action runs: the error comes from analyzing the plan
+      val ex = intercept[AnalysisException](df.agg(agg))
+      assert(ex.getMessage.contains("array<bigint>, bigint"), ex.getMessage)
+    }
+  }
 }
